@@ -89,18 +89,30 @@ def upsert_forecast(
     run_table: ParquetMergeTable,
     cfg: ExtractConfig,
 ) -> None:
-    """Fact upsert on PK (tms_id, time, fgt) + run-header merge with
-    start_date/latest_fgt maintenance (wl_x:93-97).  Both MERGEs are
-    idempotent: re-extracting the same fgt is a fixpoint."""
-    fact = with_ids.select(
-        "tms_id",
-        "time",
-        F.lit(fgt).cast("timestamp").alias("fgt"),
-        "value",
-    )
-    data_table.merge(fact)
+    """Fact upsert on PK (tms_id, time, fgt) + run-header maintenance
+    (wl_x:93-97).  Both writes are idempotent: re-extracting the same
+    fgt is a fixpoint."""
+    with_ids = with_ids.persist()  # read by both writes; released below
+    try:
+        fact = with_ids.select(
+            "tms_id",
+            "time",
+            F.lit(fgt).cast("timestamp").alias("fgt"),
+            "value",
+        )
+        data_table.merge(fact)
+        run_table.overwrite(_run_header(with_ids, fgt, run_table, cfg))
+    finally:
+        with_ids.unpersist()
 
-    header = (
+
+def _run_header(with_ids: DataFrame, fgt: str, run_table: ParquetMergeTable,
+                cfg: ExtractConfig) -> DataFrame:
+    """The whole run header after this batch.  It holds one row per
+    series, so it is rebuilt whole: one full outer join of the stored
+    and the new headers keeps the earliest ``start_date`` and the newest
+    ``latest_fgt``; the new header wins every other column."""
+    new = (
         with_ids.groupBy("tms_id", "station_id")
         .agg(F.min("time").alias("start_date"))
         .select(
@@ -113,17 +125,14 @@ def upsert_forecast(
             "start_date",
             F.lit(fgt).cast("timestamp").alias("latest_fgt"),
         )
+        .alias("new")
     )
-    # keep earliest start_date / newest latest_fgt across merges
-    existing = run_table.read().select(
-        F.col("tms_id").alias("tms_id"),
-        F.col("start_date").alias("__old_start"),
-        F.col("latest_fgt").alias("__old_fgt"),
+    old = run_table.read().alias("old")
+    kept = {"start_date": F.least, "latest_fgt": F.greatest}
+    return old.join(new, "tms_id", "full_outer").select(
+        "tms_id",
+        *[
+            kept.get(c, F.coalesce)(F.col(f"new.{c}"), F.col(f"old.{c}")).alias(c)
+            for c in run_table.schema.fieldNames() if c != "tms_id"
+        ],
     )
-    upd = (
-        header.join(existing, "tms_id", "left")
-        .withColumn("start_date", F.least("start_date", "__old_start"))
-        .withColumn("latest_fgt", F.greatest("latest_fgt", "__old_fgt"))
-        .drop("__old_start", "__old_fgt")
-    )
-    run_table.merge(upd)

@@ -76,14 +76,20 @@ def prepare_rainfall_input(
     # semi-join staleness ∩ wanted stations (rf_linux:153-157)
     series_dim = fresh.join(F.broadcast(wanted), "obs_id", "left_semi")
 
-    # one range-pruned scan of all wanted series (replaces N+1 queries)
+    # one range-pruned scan of all wanted series (replaces N+1 queries).
+    # value accumulates as DECIMAL(38,18), exact like all_stations_raw's
+    # DECIMAL(24,6) but keeping every digit a double prints: a double
+    # bucket sum depends on the order the shuffle delivers its values,
+    # and 1.02 + 1.7 - 2.72 comes out negative in every order, so the
+    # cleaning below would null a bucket that sums to exactly 0.  The
+    # resample's coalesce returns the sum as a double.
     ts = sim_ts.filter(
         (F.col("time") > F.lit(start)) & (F.col("time") <= F.lit(end))
     ).join(
         F.broadcast(series_dim),
         sim_ts["id"] == series_dim["series_hash"],
         "inner",
-    ).select("obs_id", "time", F.col("value").cast("double").alias("value"))
+    ).select("obs_id", "time", F.col("value").cast("decimal(38,18)").alias("value"))
 
     # 5-min spine × stations, left-aligned (rf_linux:144-162)
     spine = time_spine(spark, start, end, src_step_minutes)

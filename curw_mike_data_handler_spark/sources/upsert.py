@@ -8,11 +8,12 @@ The reference upserts forecast rows into MySQL with
 Three sinks:
 
 * ``ParquetMergeTable`` — lakehouse-style MERGE emulation over plain
-  parquet (no Delta in this container): anti-join the existing
-  partition state against the new keys, union, rewrite.  Idempotent
-  (re-applying the same batch is a fixpoint).  At 100 TB you'd use
-  Delta/Iceberg ``MERGE INTO`` with the same key contract; the
-  rewrite here is partition-scoped to keep the emulation honest.
+  parquet (no Delta in this container), copy-on-write at file
+  granularity: one scan finds the files that hold a batch key, and
+  only those are rewritten (``touched ▷ batch keys ∪ batch``); a batch
+  of new keys is a plain append, and a batch already stored writes
+  nothing, so re-applying the same batch is a fixpoint.  At 100 TB
+  you'd use Delta/Iceberg ``MERGE INTO`` with the same key contract.
 * ``jdbc_upsert_partition`` — MySQL parity path: batched
   ``INSERT … ON DUPLICATE KEY UPDATE`` from ``foreachPartition``
   (Spark's JDBC writer has no upsert mode).  Gated behind an
@@ -27,8 +28,11 @@ Three sinks:
 
 from __future__ import annotations
 
+import operator
 import os
 from collections.abc import Sequence
+from functools import reduce
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -39,7 +43,31 @@ class ParquetMergeTable:
     """A keyed parquet table with MERGE (upsert) writes.
 
     Last-writer-wins on the key: new rows replace existing rows with
-    the same key tuple; other rows are preserved.
+    the same key tuple; other rows are preserved.  Keys compare
+    null-safe, as ``dropDuplicates`` does.
+
+    The table is a flat directory of ``*.parquet`` files.  A merge
+    rewrites only the files that hold a key of the batch
+    (copy-on-write, as Delta Lake's MERGE does):
+
+    1. dedup the batch on the key and persist it;
+    2. one scan of the table, broadcast-joined to the batch and tagged
+       with each row's file, finds the touched files and counts the
+       batch rows already stored with null-safe-equal values;
+    3. if that count covers the whole batch, nothing is written (the
+       MERGE fixpoint); otherwise ``(touched files ▷ batch keys) ∪
+       batch`` is written once to a staging directory, its files are
+       moved into the table and the touched files are deleted.
+
+    A batch of new keys touches no file and becomes a plain append of
+    about one file, so an appended-to table gains a file per batch;
+    ``sources.maintenance.compact_partition`` is the job that compacts
+    them.
+
+    The commit is not atomic.  Between moving the new files in and
+    deleting the touched ones, a reader sees the touched rows twice,
+    and a crash there leaves both versions; an append is visible file
+    by file.
     """
 
     def __init__(self, spark: SparkSession, path: str, key_cols: Sequence[str],
@@ -55,28 +83,90 @@ class ParquetMergeTable:
         return self.spark.read.schema(self.schema).parquet(self.path)
 
     def merge(self, updates: DataFrame) -> None:
-        """MERGE: existing ▷ (anti join on key) ∪ updates → rewrite.
+        """MERGE ``updates`` into the table, rewriting only the files
+        that hold one of its keys.
 
         Within-batch duplicate keys keep an arbitrary single row
         (mirrors sequential upsert where the last statement wins)."""
-        updates = updates.dropDuplicates(self.key_cols)
-        current = self.read()
-        survivors = current.join(updates.select(self.key_cols), self.key_cols, "left_anti")
-        merged = survivors.unionByName(updates.select(current.columns))
-        tmp = self.path + "__tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        final = self.spark.read.schema(self.schema).parquet(tmp)
-        final.write.mode("overwrite").parquet(self.path + "__next")
-        _swap_dir(self.path + "__next", self.path)
-        _rm_dir(tmp)
+        # one partition: the batch is broadcast to the probe anyway, and
+        # an append then adds one file
+        batch = (
+            updates.dropDuplicates(self.key_cols)
+            .select([F.col(f.name).cast(f.dataType) for f in self.schema])
+            .coalesce(1)
+            .persist()
+        )
+        try:
+            n_batch = batch.count()
+            if n_batch == 0:
+                return
+            touched, n_stored = self._probe(batch) if self._files() else ([], 0)
+            if n_stored == n_batch:
+                return
+            out = batch
+            if touched:
+                keys = batch.select([F.col(k).alias(f"__b_{k}") for k in self.key_cols])
+                survivors = (
+                    self.spark.read.schema(self.schema).parquet(*touched)
+                    .join(F.broadcast(keys), _null_safe_eq(self.key_cols), "left_anti")
+                )
+                out = survivors.unionByName(batch)
+            self._commit(out, replaced=touched)
+        finally:
+            batch.unpersist()
+
+    def overwrite(self, df: DataFrame) -> None:
+        """Replace the whole table with ``df`` through the same staging
+        commit as ``merge``.  ``df`` may read the table itself."""
+        self._commit(df.select([F.col(f.name).cast(f.dataType) for f in self.schema]),
+                     replaced=self._files())
+
+    def _files(self) -> list[str]:
+        if not os.path.isdir(self.path):
+            return []
+        return [os.path.join(self.path, f) for f in os.listdir(self.path)
+                if f.endswith(".parquet") and not f.startswith(("_", "."))]
+
+    def _probe(self, batch: DataFrame) -> tuple[list[str], int]:
+        """(files holding a batch key, batch rows stored with equal
+        values): one scan of the table against the broadcast batch."""
+        values = [c for c in self.schema.fieldNames() if c not in self.key_cols]
+        tagged = batch.select([F.col(c).alias(f"__b_{c}") for c in batch.columns])
+        same = _null_safe_eq(values) if values else F.lit(True)
+        rows = (
+            self.spark.read.schema(self.schema).parquet(self.path)
+            .withColumn("__file", F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1))
+            .join(F.broadcast(tagged), _null_safe_eq(self.key_cols), "inner")
+            .groupBy("__file")
+            .agg(F.sum(same.cast("long")).alias("__same"))
+            .collect()
+        )
+        touched = [os.path.join(self.path, unquote(r["__file"])) for r in rows]
+        return touched, sum(r["__same"] for r in rows)
+
+    def _commit(self, out: DataFrame, replaced: Sequence[str]) -> None:
+        """Write ``out`` to a staging directory, move its files into the
+        table, then delete ``replaced`` (see the class docstring on the
+        non-atomic window)."""
+        staging = self.path + "__staging"
+        _rm_dir(staging)
+        out.write.parquet(staging)
+        os.makedirs(self.path, exist_ok=True)
+        for name in os.listdir(staging):  # data files and their checksums
+            if name.endswith((".parquet", ".parquet.crc")):
+                os.replace(os.path.join(staging, name), os.path.join(self.path, name))
+        for path in replaced:
+            head, name = os.path.split(path)
+            for f in (path, os.path.join(head, f".{name}.crc")):
+                if os.path.exists(f):
+                    os.remove(f)
+        _rm_dir(staging)
 
 
-def _swap_dir(src: str, dst: str) -> None:
-    import shutil
-
-    if os.path.exists(dst):
-        shutil.rmtree(dst)
-    os.rename(src, dst)
+def _null_safe_eq(cols: Sequence[str]):
+    """Each of ``cols`` equals its ``__b_``-prefixed batch twin, NULL
+    matching NULL."""
+    return reduce(operator.and_, [F.col(c).eqNullSafe(F.col(f"__b_{c}")) for c in cols])
 
 
 def _rm_dir(path: str) -> None:

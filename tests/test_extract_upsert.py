@@ -1,14 +1,17 @@
 """Extraction + upsert tests (SURVEY §5 strategy 4): deterministic IDs,
 fgt versioning, idempotence (re-apply ⇒ fixpoint), latest-fgt reads,
-skip reporting.
+skip reporting, and the merge's write scope: which files a MERGE adds,
+rewrites or leaves alone.
 """
 
 from __future__ import annotations
 
-from datetime import datetime
+import os
+from datetime import datetime, timedelta, timezone
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
 from curw_mike_data_handler_spark.plans.extract import (
     ExtractConfig,
@@ -105,6 +108,136 @@ def test_merge_partial_overlap(spark, tmp_path):
     t.merge(spark.createDataFrame([(2, "B"), (3, "c")], schema))
     got = {r["k"]: r["v"] for r in t.read().collect()}
     assert got == {1: "a", 2: "B", 3: "c"}
+
+
+def _listing(path):
+    """name → (size, mtime_ns) of every entry of a table directory."""
+    stats = {f: os.stat(os.path.join(path, f)) for f in os.listdir(path)}
+    return {f: (st.st_size, st.st_mtime_ns) for f, st in stats.items()}
+
+
+def _parquet(listing):
+    return {f: st for f, st in listing.items() if f.endswith(".parquet")}
+
+
+def _files_holding(t, cond):
+    return {r["f"] for r in t.read().filter(cond).select(
+        F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1).alias("f")).collect()}
+
+
+KV = StructType([StructField("k", IntegerType()), StructField("v", DoubleType())])
+
+
+def test_merge_of_new_keys_appends_and_leaves_files_alone(spark, tmp_path):
+    t = ParquetMergeTable(spark, str(tmp_path / "m"), ["k"], KV)
+    t.merge(spark.createDataFrame([(i, float(i)) for i in range(6)], KV))
+    before = _parquet(_listing(t.path))
+    t.merge(spark.createDataFrame([(i, float(i)) for i in range(6, 9)], KV))
+    after = _parquet(_listing(t.path))
+    assert set(after) > set(before)
+    assert {f: after[f] for f in before} == before
+    assert sorted(tuple(r) for r in t.read().collect()) == [(i, float(i)) for i in range(9)]
+    assert not os.path.exists(t.path + "__staging")
+
+
+def test_reapplied_batch_with_null_value_writes_nothing(spark, tmp_path):
+    t = ParquetMergeTable(spark, str(tmp_path / "m"), ["k"], KV)
+    batch = spark.createDataFrame([(1, 1.5), (2, None), (3, -0.25)], KV)
+    t.merge(batch)
+    before = _listing(t.path)
+    t.merge(batch)
+    assert _listing(t.path) == before
+    assert sorted(map(tuple, t.read().collect()), key=repr) == sorted(
+        [(1, 1.5), (2, None), (3, -0.25)], key=repr)
+
+
+def test_changing_one_key_rewrites_only_its_file(spark, tmp_path):
+    t = ParquetMergeTable(spark, str(tmp_path / "m"), ["k"], KV)
+    t.merge(spark.createDataFrame([(i, 0.0) for i in range(3)], KV))
+    t.merge(spark.createDataFrame([(i, 0.0) for i in range(3, 6)], KV))
+    before = _parquet(_listing(t.path))
+    holding = _files_holding(t, F.col("k") == 4)
+    assert len(holding) == 1 and len(before) >= 2
+
+    t.merge(spark.createDataFrame([(4, 4.0)], KV))
+    after = _parquet(_listing(t.path))
+    assert not holding & set(after)
+    assert {f: after[f] for f in before if f not in holding} == {
+        f: st for f, st in before.items() if f not in holding}
+    assert {r["k"]: r["v"] for r in t.read().collect()} == {
+        0: 0.0, 1: 0.0, 2: 0.0, 3: 0.0, 4: 4.0, 5: 0.0}
+
+
+def test_pyarrow_int64_and_spark_timestamps_read_back_the_same_instants(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    utc = timezone.utc
+    t0 = datetime(2020, 5, 22, tzinfo=utc)
+    f0 = datetime(2020, 5, 21, 18, tzinfo=utc)
+    path = tmp_path / "fcst_data"
+    path.mkdir()
+    pq.write_table(pa.table({
+        "tms_id": ["a", "a", "b"],
+        "time": pa.array([t0, t0 + timedelta(minutes=15), t0], pa.timestamp("us", tz="UTC")),
+        "fgt": pa.array([f0] * 3, pa.timestamp("us", tz="UTC")),
+        "value": [1.0, 2.0, 3.0],
+    }), str(path / "part-00000.parquet"))
+    t = ParquetMergeTable(spark, str(path), ["tms_id", "time", "fgt"], FCST_DATA)
+
+    def batch(rows):
+        return spark.createDataFrame(rows, "tms_id string, time timestamp, fgt timestamp, value double")
+
+    def contents():
+        return sorted(tuple(r) for r in t.read().select(
+            "tms_id", F.unix_micros("time"), F.unix_micros("fgt"), "value").collect())
+
+    def us(d):
+        return int(d.timestamp()) * 1_000_000
+
+    f1 = f0 + timedelta(hours=1)
+    t.merge(batch([("a", t0, f1, 9.0)]))
+    spark_files = [f for f in os.listdir(path) if f.endswith(".parquet") and f != "part-00000.parquet"]
+    assert len(spark_files) == 1
+    time_type = {f: pq.ParquetFile(str(path / f)).schema.column(1).physical_type
+                 for f in ("part-00000.parquet", spark_files[0])}
+    assert time_type == {"part-00000.parquet": "INT64", spark_files[0]: "INT96"}
+    want = [("a", us(t0), us(f0), 1.0), ("a", us(t0) + 900_000_000, us(f0), 2.0),
+            ("a", us(t0), us(f1), 9.0), ("b", us(t0), us(f0), 3.0)]
+    assert contents() == sorted(want)
+
+    # rows the pyarrow file already holds are found: no write
+    before = _listing(str(path))
+    t.merge(batch([("a", t0, f0, 1.0), ("b", t0, f0, 3.0)]))
+    assert _listing(str(path)) == before
+
+    # a change to a pyarrow-held row rewrites that file only
+    t.merge(batch([("b", t0, f0, 30.0)]))
+    after = _listing(str(path))
+    assert "part-00000.parquet" not in after and after[spark_files[0]] == before[spark_files[0]]
+    assert contents() == sorted(want[:3] + [("b", us(t0), us(f0), 30.0)])
+
+
+def test_run_header_keeps_earliest_start_and_newest_fgt_out_of_order(
+        spark, wide, station_dim, tmp_path):
+    with_ids, _ = attach_series_ids(melt_result_matrix(wide), station_dim, ExtractConfig())
+    data_t = ParquetMergeTable(spark, str(tmp_path / "fcst_data"), ["tms_id", "time", "fgt"], FCST_DATA)
+    run_t = ParquetMergeTable(spark, str(tmp_path / "fcst_run"), ["tms_id"], FCST_RUN)
+
+    def header():
+        return {r["tms_id"]: (r["start_date"], r["latest_fgt"]) for r in run_t.read().collect()}
+
+    upsert_forecast(with_ids, "2020-05-22 02:00:00", data_t, run_t, ExtractConfig())
+    # an older forecast arriving late, whose series start a day earlier
+    earlier = with_ids.withColumn("time", F.col("time") - F.expr("INTERVAL 1 DAY"))
+    upsert_forecast(earlier, "2020-05-22 01:00:00", data_t, run_t, ExtractConfig())
+    hdr = header()
+    assert len(hdr) == 2
+    assert set(hdr.values()) == {(datetime(2020, 5, 21), datetime(2020, 5, 22, 2))}
+
+    upsert_forecast(with_ids, "2020-05-22 03:00:00", data_t, run_t, ExtractConfig())
+    assert set(header().values()) == {(datetime(2020, 5, 21), datetime(2020, 5, 22, 3))}
+    assert data_t.read().count() == 12
 
 
 class _FakeUpsertCursor:

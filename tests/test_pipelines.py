@@ -153,6 +153,42 @@ def test_rainfall_pipeline_matches_pandas(spark):
         )
 
 
+@pytest.mark.parametrize("partitions", [1, 4, 8])
+def test_rainfall_bucket_summing_to_zero_is_kept(spark, partitions):
+    """A 15-min bucket whose 5-min values cancel exactly sums to 0 and is
+    kept, at any shuffle partitioning.  As doubles, 0.41 + 0.61 - 1.02
+    can come out as -5.6e-17 and 1.02 + 1.7 - 2.72 is negative in every
+    order; the cleaning then nulls the bucket and the row mean fills it."""
+    a, b = fx.series_hash(0), fx.series_hash(1)
+    t0 = pd.Timestamp(START).to_pydatetime()
+    cancel = [0.41, 0.61, -1.02, 1.02, 1.7, -2.72]
+    ts_rows = [(a, t0 + pd.Timedelta(minutes=5 * (i + 1)), v) for i, v in enumerate(cancel)]
+    ts_rows += [(b, t0 + pd.Timedelta(minutes=5 * (i + 1)), 1.0) for i in range(len(cancel))]
+    run_rows = [(a, "hechms", "rainfall_100000_a", pd.Timestamp(END).to_pydatetime()),
+                (b, "hechms", "rainfall_100001_b", pd.Timestamp(END).to_pydatetime())]
+    coeff_rows = [("C_00", "100000", 1.0), ("C_01", "100000", 0.5), ("C_01", "100001", 0.5)]
+    end = "2020-05-22 00:30:00"
+
+    previous = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
+    try:
+        got = prepare_rainfall_input(
+            spark, spark.createDataFrame(ts_rows, SIM_TIMESERIES),
+            spark.createDataFrame(run_rows, SIM_RUN),
+            spark.createDataFrame(coeff_rows, SB_RF_COEFFICIENTS), START, end,
+        ).toPandas()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", previous)
+    wide = got.pivot(index="time", columns="name", values="value").sort_index()
+    expect = _pandas_rainfall_reference(ts_rows, run_rows, coeff_rows, START, end)
+    assert expect["C_00"].tolist() == [0.0, 0.0, 0.0]
+    for c in expect.columns:
+        pd.testing.assert_series_equal(
+            wide[c], expect[c], check_names=False, check_freq=False, check_index_type=False,
+            rtol=1e-9, atol=1e-9,
+        )
+
+
 def test_rainfall_staleness_filter_excludes_stale_series(spark):
     ts_rows = fx.gen_sim_timeseries(n_series=2, gap_rate=0.0, neg_rate=0.0)
     run_rows = fx.gen_run(2)  # series 1 is stale
